@@ -48,7 +48,10 @@ object VirusPipeline {
     *   stage would materialize anyway — same total work, attributable
     *   wall-clock. Bench feeds these into `pipeline_virus_s*` rows so
     *   a per-round series can name the stage that diverges instead of
-    *   one opaque e2e number. */
+    *   one opaque e2e number.
+    * @return artifacts whose `top`, `vectors` and `assignments` frames
+    *   are cached (`writeArtifacts` and the reports read them); the
+    *   caller owns them and unpersists them when done. */
   def run(spark: SparkSession, apiLogsDir: String, topN: Int = 2000,
           k: Int = 10, seed: Long = 42L, runs: Int = 10,
           onStage: (String, Double) => Unit = (_, _) => ()): Artifacts = {
@@ -58,18 +61,18 @@ object VirusPipeline {
       mark = now
     }
     // stage 1 — feature selection (FeatureSelectionCloud). The
-    // per-sample dedup runs ONCE, shared by ranking and vectorization
-    // through the OfDistinct variants (vp04/vp05's proven sharing).
-    // The raw corpus text is NOT cached (round-15 verdict: caching
-    // corpus-sized raw text is the failure mode at 100 TB, the same
-    // reasoning that dropped curation's raw-text checkpoints) — the
-    // totals consumer needs only (sample_id, cls), so it rides its
-    // own cheap scan; the dedup'd calls frame below IS cached and is
-    // what every downstream consumer reads.
-    val raw = ApiLogReader.readRaw(spark, apiLogsDir)
-    val totals = ApiLogReader.totalsOf(raw, "virus")
-    val distinct = FeatureSelection.distinctCalls(
-      ApiLogReader.callsOf(raw)).cache()
+    // per-sample dedup runs ONCE over ONE corpus scan and is shared by
+    // the totals, ranking and vectorization (vp04/vp05's proven
+    // sharing). It keeps the empty token, so `totalsOf` still counts
+    // token-less files, and `callsOf` drops it afterwards — the same
+    // rows as filtering before the dedup. The raw corpus text is NOT
+    // cached (round-15 verdict: caching corpus-sized raw text is the
+    // failure mode at 100 TB); `seen` holds at most one row per
+    // (sample, distinct API), so it is digest-sized.
+    val seen = FeatureSelection.distinctCalls(
+      ApiLogReader.readRaw(spark, apiLogsDir)).cache()
+    val totals = ApiLogReader.totalsOf(seen, "virus")
+    val distinct = ApiLogReader.callsOf(seen)
     val ranked = FeatureSelection.infoGainRankedOfDistinct(
       distinct, "virus", totals)
     val top = FeatureSelection.topFeatures(ranked, topN).cache()
@@ -79,7 +82,7 @@ object VirusPipeline {
     vec.count() // boundary: stage-2 reads the populated cache
     // top/vec are materialized; nothing downstream re-reads the
     // dedup'd calls — release it before clustering
-    distinct.unpersist(false)
+    seen.unpersist(false)
     stageDone("s1_features")
 
     // stage 2 — clustering (KmeansVirus): sparse vectors per sample
@@ -110,6 +113,8 @@ object VirusPipeline {
       .select("cluster", "label", "sample_id", "apis")
       .cache()
     assignments.count() // boundary: report/export read the cache
+    // the fits and assignments are done; nothing reads samples again
+    samples.unpersist(false)
     stageDone("s2_cluster")
 
     // A4+O4+K6: "Cluster N contains C L files" report rows

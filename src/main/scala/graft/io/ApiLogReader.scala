@@ -16,20 +16,29 @@ import org.apache.spark.sql.functions._
   * reference (P1, `:333-337`) — this also erases the trailing ` -` of
   * every line; lines that normalize to empty are dropped (P2, `:337`).
   *
-  * At scale: many small files are the classic pathology here — Spark
-  * handles packing via `maxPartitionBytes`/file coalescing, and the
-  * output is immediately long-form columnar so everything downstream
-  * is a normal shuffle-based operator.
+  * At scale: many small files are the classic pathology here. Spark
+  * gets the class directories as its root paths, not the files, and
+  * the `*.txt` filter as the `pathGlobFilter` option: with fewer roots
+  * than `spark.sql.sources.parallelPartitionDiscovery.threshold` (32),
+  * listing runs on the driver and starts no Spark job (a per-file glob
+  * hands Spark one root per file, and above 32 of them it lists them
+  * in a job of one task per file). Only direct-child `.txt` files are
+  * read, like the per-file glob. A file with no line (zero bytes) is
+  * no sample: the frame has no row for it, although the reference's
+  * listing would count it; the FIXTURES.md §1 corpus has none.
   */
 object ApiLogReader {
 
   /** One corpus text scan, UNFILTERED: every line becomes a row even
     * when its token normalizes to empty. [[callsOf]] and [[totalsOf]]
-    * derive both stage-1 inputs from this single frame, so a caller
-    * that caches it (the pipeline) pays ONE pass over the raw corpus
-    * instead of one per consumer. */
+    * derive both stage-1 inputs from this single frame or from its
+    * per-sample dedup (`FeatureSelection.distinctCalls`), which keeps
+    * the empty token too. The pipeline caches that dedup, so it pays
+    * ONE pass over the raw corpus and caches a digest-sized frame, not
+    * the raw text. */
   def readRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.textFile(s"$dir/*_LOGS_CONVERTED/*.txt").toDF("line")
+    spark.read.option("pathGlobFilter", "*.txt")
+      .textFile(s"$dir/*_LOGS_CONVERTED").toDF("line")
       .select(
         // sample_id keeps the class directory: the same basename exists
         // in BOTH class dirs, so basename alone would merge two samples.
@@ -58,7 +67,8 @@ object ApiLogReader {
   def totals(spark: SparkSession, dir: String, posCls: String): DataFrame =
     totalsOf(readRaw(spark, dir), posCls)
 
-  /** [[totals]] over an already-read [[readRaw]] frame — `sample_id`
+  /** [[totals]] over an already-read [[readRaw]] frame or its
+    * per-sample dedup (same sample_ids, fewer rows) — `sample_id`
     * is `classdir/basename`, a bijection of the file path within the
     * corpus, so distinct sample_ids count exactly the files the old
     * per-path distinct counted (and, like it, sees token-less files

@@ -56,7 +56,8 @@ class ReferenceParitySpec extends AnyFunSuite {
   }
 
   test("corpus shape matches the measured scale facts") {
-    assume(new java.io.File(s"$refDir/api_logs").isDirectory)
+    assume(new java.io.File(s"$refDir/api_logs").isDirectory,
+      s"needs $refDir/api_logs")
     val totals = ApiLogReader.totals(spark, s"$refDir/api_logs", "virus")
       .collect()(0)
     assert(totals.getLong(0) == 884)  // virus files (readme.md:87)
@@ -68,7 +69,8 @@ class ReferenceParitySpec extends AnyFunSuite {
   }
 
   test("every committed-golden token that occurs in the corpus is ranked") {
-    assume(new java.io.File(s"$refDir/api_logs").isDirectory)
+    assume(new java.io.File(s"$refDir/api_logs").isDirectory,
+      s"needs $refDir/api_logs")
     val committed = scala.io.Source.fromFile(s"$refDir/topFeatures.txt")
       .getLines().flatMap { line =>
         "^\\((.*),([-0-9.Ee]+)\\)$".r.findFirstMatchIn(line.trim).map(_.group(1))

@@ -3,6 +3,8 @@ package graft
 import graft.apps.VirusPipeline
 import graft.io.Codecs
 import graft.operators.FeatureSelection
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end pipeline on the tiny fixture: artifacts exist with the
@@ -13,6 +15,7 @@ class VirusPipelineSpec extends AnyFunSuite {
 
   private val dir =
     new java.io.File("src/test/resources/tiny_api_logs").getAbsolutePath
+  private val refLogs = "/root/reference/api_logs"
 
   test("pipeline writes all four artifacts in reference formats") {
     val out = java.nio.file.Files.createTempDirectory("graft_vp_").toString
@@ -48,6 +51,32 @@ class VirusPipelineSpec extends AnyFunSuite {
     assert(score >= 0.0 && score <= math.log(2))
   }
 
+  test("stage 1 scans the corpus files in exactly one Spark stage") {
+    // the per-sample dedup is the only consumer of the raw scan; the
+    // totals, ranking and vectors all read its cache
+    val sc = spark.sparkContext
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scans.add(e.stageInfo.stageId)
+    }
+    var stage1Scans = -1
+    // an earlier run's cached top/vectors have the same plans and
+    // would answer stage 1 without any scan
+    spark.catalog.clearCache()
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try VirusPipeline.run(spark, dir, topN = 10, k = 2,
+      onStage = (name, _) => if (name == "s1_features") {
+        TestBus.drain(sc)
+        stage1Scans = scans.size
+      })
+    finally sc.removeSparkListener(listener)
+    assert(stage1Scans == 1,
+      s"stage 1 completed $stage1Scans stages reading the corpus files")
+  }
+
   test("LIBSVM codec round-trips") {
     import spark.implicits._
     val lines = Seq("1 2:1 5:1", "0 1:1").toDS()
@@ -64,9 +93,9 @@ class VirusPipelineSpec extends AnyFunSuite {
     // equivalent of ReferenceParitySpec's stage-1 golden. Any change
     // to feature selection, vector assembly, clustering seeds, or the
     // output codecs shows up here as a byte diff.
-    assume(new java.io.File("/root/reference/api_logs").isDirectory)
+    assume(new java.io.File(refLogs).isDirectory, s"needs $refLogs")
     val out = java.nio.file.Files.createTempDirectory("graft_golden_").toString
-    val a = VirusPipeline.run(spark, "/root/reference/api_logs")
+    val a = VirusPipeline.run(spark, refLogs)
     VirusPipeline.writeArtifacts(a, out)
     def bytes(p: String) = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(p))
@@ -80,8 +109,8 @@ class VirusPipelineSpec extends AnyFunSuite {
 
   test("classification report uses the reference's console format") {
     // needs enough rows to split; use the real corpus if present
-    assume(new java.io.File("/root/reference/api_logs").isDirectory)
-    val a = VirusPipeline.run(spark, "/root/reference/api_logs", topN = 2000)
+    assume(new java.io.File(refLogs).isDirectory, s"needs $refLogs")
+    val a = VirusPipeline.run(spark, refLogs, topN = 2000)
     val samples = VirusPipeline.assemble(a.vectors, a.top.count().toInt)
     val rep = VirusPipeline.classificationReport(spark, samples)
     val rows = rep.collect()
@@ -110,8 +139,8 @@ class VirusPipelineSpec extends AnyFunSuite {
     // ship — SURVEY §2.8). Assert the band on the byte-faithful
     // optimizer, where the published shape is a property of the
     // algorithm, not of one dataset draw.
-    assume(new java.io.File("/root/reference/api_logs").isDirectory)
-    val a = VirusPipeline.run(spark, "/root/reference/api_logs", topN = 2000)
+    assume(new java.io.File(refLogs).isDirectory, s"needs $refLogs")
+    val a = VirusPipeline.run(spark, refLogs, topN = 2000)
     val samples = VirusPipeline.assemble(a.vectors, a.top.count().toInt)
     val sgd = VirusPipeline.sgdReport(spark, samples).collect()
       .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
